@@ -1,11 +1,11 @@
 #!/usr/bin/env python3
 """Split an Entries* registry object into two balanced files.
 
-Zero-behavior-change discipline (same as split_sparkentry.py): entries
-are MOVED verbatim — never edited — into a sibling object `<Name>2`,
-keeping each query entry paired with its oracle entry. The facade
-(SparkEntry) must be updated to assemble both objects; gate fingerprints
-cat Entries*.scala by glob so new files join automatically.
+Zero-behavior-change discipline: entries are MOVED verbatim — never
+edited — into a sibling object `<Name>2`, keeping each query entry
+paired with its oracle entry. The facade (SparkEntry) must be updated to
+assemble both objects; gate fingerprints cat Entries*.scala by glob so
+new files join automatically.
 
 Usage: split_registry.py <file> <ObjectName>
 Writes <file> (first half) and <file minus .scala>2.scala (second half).

@@ -1,121 +1,62 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.Locale
 
-/** Per-round benchmark: runs the headline queries on SPARK_GRAFT_SF_DIR and
-  * prints one JSON line {"metric":…,"queries":{…}}.
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.config.Configurator
+
+/** Per-round benchmark: times the 14 headline queries (min of 3) and the
+  * 22-query TPC-H-adapted suite (min of 2) on SPARK_GRAFT_SF_DIR with
+  * `local[SPARK_GRAFT_CPUS]`, and prints one JSON line as the last stdout
+  * line (see [[resultLine]]). The same line is written to
+  * `bench_result.json` (SPARK_GRAFT_BENCH_OUT overrides the path).
   *
-  * The line also carries:
-  *  - `loadavg_start`/`loadavg_end` (1-min /proc/loadavg): a run polluted
-  *    by box contention is self-identifying instead of masquerading as a
-  *    code regression (the r4 snapshot measured 27.9 s under end-of-round
-  *    load for a build whose idle-box time was 12.0 s);
-  *  - `h_total` + `h_queries`: the 22-query TPC-H-adapted relational suite,
-  *    so relational-core regressions are caught round-over-round. `value`
-  *    stays the 14 headline queries ONLY — its series is comparable across
-  *    rounds and against BASELINE.md.
+  * `value` is the headline suite only, so its series stays comparable
+  * with BASELINE.md; `h_total` is the h-suite. The 1-min load average at
+  * start and end is recorded as data and never acted on: noise between
+  * runs is handled by the paired runs of `perfbench/`, not here.
   *
-  * Measurement hygiene (r6 judge findings): cached/localCheckpointed
-  * blocks are dropped after EVERY timed run, so no query's measurement
-  * inherits block-manager state from an earlier query or phase (the r6
-  * artifact showed h20 at 5.05 s integrated vs 0.84 s standalone purely
-  * from accumulated checkpoint blocks); a start loadavg above
-  * `ContendedLoad` first waits (up to ~5 min) for the box to go idle;
-  * and an END loadavg above the threshold (contention that arrived
-  * mid-run — the r8 artifact started at 1.90, ended 2.34, and read ~18%
-  * slow) waits for decay and re-measures once, min-merging the two
-  * passes. Only if the load never decays does the line carry
-  * "contended":true — a polluted run self-identifies instead of reading
-  * as a regression.
-  *
-  * r15 (judge ask #4 — three consecutive rounds burned adjudication
-  * effort on single-query driver-artifact phantoms: r12 h02, r13
-  * q01/q02/q06, r14 h22 at 19.5×): after the min-of-N passes, any query
-  * whose figure exceeds [[OutlierFactor]]× its BASELINE.md ledger entry
-  * (the fenced `json bench-ledger` block) is RE-MEASURED once the 1-min
-  * load decays below [[StampLoad]]; the line reports the final minimum
-  * plus a `remeasured` object carrying each outlier's first-pass figure
-  * — a phantom carries its own adjudication. `contended` is stamped
-  * from the honest [[StampLoad]] = 1.5 bar (not the old 2.0), matching
-  * what idle-box adjudications actually accept.
-  *
-  * r16 (judge ask #4): the stamp reads `loadavg_start` plus a DECAYED
-  * post-run resample (wait ≤90 s for the 1-min load to shed the bench's
-  * own 32-thread contribution, then re-read) — the raw end sample,
-  * which the bench itself dominates, is reported but only ever triggers
-  * the retry/outlier passes. An idle-box run now stamps
-  * `contended:false` instead of indicting itself.
+  * Cached and localCheckpointed blocks are dropped after every query, so
+  * no measurement inherits block-manager state from an earlier query.
   */
 object Bench {
+  /** Per query: min wall seconds over the runs that succeeded, or None
+    * when every run failed. */
+  type Timings = Seq[(String, Option[Double])]
+
   private def loadavg1m: Double =
     try scala.io.Source.fromFile("/proc/loadavg").mkString
       .split("\\s+").head.toDouble
     catch { case _: Throwable => -1.0 }
 
-  /** Load threshold above which the run first waits, then annotates. */
-  val ContendedLoad = 2.0
+  // JSON numbers must use '.' whatever the JVM's default locale
+  private def num(v: Double, digits: Int): String =
+    s"%.${digits}f".formatLocal(Locale.ROOT, v)
 
-  /** The honest idle bar: `contended` is stamped (and the outlier
-   * re-measure gate waits) against THIS figure — a loadavg in
-   * (1.5, 2.0] used to stamp clean yet reads measurably slow. */
-  val StampLoad = 1.5
+  private def fmt(rs: Timings): String = rs.map {
+    case (k, Some(v)) => "\"" + k + "\":" + num(v, 3)
+    case (k, None) => "\"" + k + "\":\"error\""
+  }.mkString("{", ",", "}")
 
-  /** A query reading above this multiple of its BASELINE.md ledger
-   * figure is re-measured after an idle wait. */
-  val OutlierFactor = 2.0
-
-  /** r17 (judge ask #5): the 2.0× bar has a blind spot for 1.5–2×
-   * contention inflation on the heavy queries — the r16 driver artifact
-   * booked d04 at 1.87× its ledger entry under residual load and never
-   * got the idle re-measure that rescued q01/q02/q06/h02. Queries whose
-   * ledger figure is at least [[HeavyLedgerSec]] use this tighter bar. */
-  val HeavyOutlierFactor = 1.5
-  val HeavyLedgerSec = 1.0
-
-  /** Per-query reference seconds from BASELINE.md's fenced
-   * ```json bench-ledger``` block (empty when absent — the outlier
-   * pass then has nothing to compare against and is skipped).
-   * `valid` restricts parsed keys to actual query names, so a future
-   * numeric metadata key in the block (e.g. `"round": 16`) can never
-   * masquerade as a query reference. The file is found at
-   * `SPARK_GRAFT_BASELINE` when set, else `BASELINE.md` under the
-   * JVM's working directory (sbt forks with cwd = project root). */
-  private[graft] def ledger(valid: String => Boolean = _ => true,
-      baselineOverride: Option[String] = sys.env.get("SPARK_GRAFT_BASELINE"))
-      : Map[String, Double] = {
-    try {
-      // an EXPLICIT override is authoritative: pointing it at a missing
-      // path disables the ledger outright (the r17 sf1 series needs
-      // that — sf1 readings vs sf0.1 references would false-trip the
-      // outlier pass on every query). Fallback to BASELINE.md only when
-      // the variable is unset.
-      val path = baselineOverride
-        .fold(Option("BASELINE.md"))(p => Option(p))
-        .filter(p => new java.io.File(p).isFile)
-      path match {
-        case Some(p) =>
-          // explicit UTF-8: the forked JVM's default charset may be
-          // ASCII, and BASELINE.md carries multibyte prose
-          val txt = new String(java.nio.file.Files.readAllBytes(
-            java.nio.file.Paths.get(p)), java.nio.charset.StandardCharsets.UTF_8)
-          val block = "(?s)```json bench-ledger\\s*(\\{.*?\\})\\s*```".r
-          block.findFirstMatchIn(txt).map(_.group(1)) match {
-            case Some(json) =>
-              "\"([A-Za-z0-9_]+)\"\\s*:\\s*([0-9][0-9.]*)".r
-                .findAllMatchIn(json)
-                .filter(g => valid(g.group(1)))
-                .map(g => g.group(1) -> g.group(2).toDouble).toMap
-            case None => Map.empty
-          }
-        case None => Map.empty
-      }
-    } catch { case _: Throwable => Map.empty }
+  /** The result line: a single JSON object. A failed query renders as
+    * `"error"`, is counted in `errors`/`h_errors` and adds nothing to
+    * `value`/`h_total`. Figures only compare at equal `cpus` and `sf`. */
+  private[graft] def resultLine(results: Timings, hResults: Timings,
+      loadStart: Double, loadEnd: Double, cpus: Int, sfDir: String): String = {
+    def total(rs: Timings) = num(rs.flatMap(_._2).sum, 3)
+    def errors(rs: Timings) = rs.count(_._2.isEmpty)
+    val sf = sfDir.replace("\\", "\\\\").replace("\"", "\\\"")
+    s"""{"metric":"total","value":${total(results)},"unit":"sec","runs":3,""" +
+      s""""agg":"min","errors":${errors(results)},"queries":${fmt(results)},""" +
+      s""""h_total":${total(hResults)},"h_runs":2,"h_errors":${errors(hResults)},""" +
+      s""""h_queries":${fmt(hResults)},"loadavg_start":${num(loadStart, 2)},""" +
+      s""""loadavg_end":${num(loadEnd, 2)},"cpus":$cpus,"sf":"$sf"}"""
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.builder(s"local[$cpus]", cpus)
       // signature/verification frames at bench scale are tens of MB; let
       // them broadcast instead of paying two shuffle-join sorts (at real
       // scale they exceed this and AQE falls back to sort-merge)
@@ -123,15 +64,9 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // loadavg guard: a contended box measures the box, not the code.
-    // Wait in 15 s steps (bounded) for the 1-min load to decay below the
-    // threshold before timing anything; if it never does, proceed but
-    // mark the line contended.
-    var waited = 0
-    while (loadavg1m > ContendedLoad && waited < 300) {
-      System.err.println(f"BENCH WAIT loadavg ${loadavg1m}%.2f > $ContendedLoad%.1f, sleeping 15s")
-      Thread.sleep(15000); waited += 15
-    }
+    // clearState() unpersists local checkpoints, and the RDD logger warns
+    // once per block ("... was locally checkpointed ..."); keep its errors
+    Configurator.setLevel("org.apache.spark.rdd", Level.ERROR)
     val loadStart = loadavg1m
 
     /** Drop every cached/localCheckpointed block so the next measurement
@@ -154,7 +89,7 @@ object Bench {
     /** Min-of-`runs` wall time per query; a failed run must NOT feed its
      * wall time into the min — a query that throws fast would otherwise
      * report as a fast success. */
-    def time(qs: Seq[String], runs: Int): Seq[(String, Option[Double])] =
+    def time(qs: Seq[String], runs: Int): Timings =
       qs.map { name =>
         val fn = SparkEntry.queries(name)
         val times = (1 to runs).flatMap { _ =>
@@ -175,119 +110,17 @@ object Bench {
         name -> times.minOption
       }
 
-    def fmt(rs: Seq[(String, Option[Double])]): String = rs.map {
-      case (k, Some(v)) => "\"" + k + f"""\":$v%.3f"""
-      case (k, None) => "\"" + k + "\":\"error\""
-    }.mkString("{", ",", "}")
-
     // steady-state throughput: 3 runs per query, report the min (first run
     // pays one-off whole-stage-codegen JIT compilation, ~6s on the heavy
     // dedup pipelines; a third run tightens the min against background
     // noise on a shared box — measured run-to-run spread is ~1.5x)
-    var results = time(names, runs = 3)
+    val results = time(names, runs = 3)
     // TPC-H-adapted relational suite: 2 runs (22 queries; the min still
     // sheds the per-plan codegen cost, and the suite is ~1 s/query)
     val hNames = TpchSuite.sql.keys.toSeq.sorted.map(n => s"${n}_tpch")
       .filter(SparkEntry.queries.contains)
-    var hResults = time(hNames, runs = 2)
-    var loadEnd = loadavg1m
-
-    // END-load guard: the start gate can't see contention that ARRIVES
-    // mid-run (r8's committed bench started at 1.90 and ended at 2.34 —
-    // ~18% inflated vs idle). If the box got busy while we measured,
-    // wait (bounded) for the load to decay and re-measure ONCE, keeping
-    // the per-query min of the two passes — contention only ever
-    // inflates, so min-merging is sound. If the load never decays, the
-    // line is stamped contended for the cross-round ledger.
-    var retried = false
-    if (loadEnd > ContendedLoad) {
-      var waited2 = 0
-      while (loadavg1m > ContendedLoad && waited2 < 300) {
-        System.err.println(f"BENCH RETRY WAIT loadavg ${loadavg1m}%.2f > $ContendedLoad%.1f, sleeping 15s")
-        Thread.sleep(15000); waited2 += 15
-      }
-      if (loadavg1m <= ContendedLoad) {
-        retried = true
-        def minMerge(a: Seq[(String, Option[Double])],
-            b: Seq[(String, Option[Double])]) = {
-          val bm = b.toMap
-          a.map { case (k, v) =>
-            k -> (v ++ bm.getOrElse(k, None)).minOption
-          }
-        }
-        results = minMerge(results, time(names, runs = 3))
-        hResults = minMerge(hResults, time(hNames, runs = 2))
-        loadEnd = loadavg1m
-      }
-    }
-
-    // outlier self-adjudication (r15): any figure above OutlierFactor×
-    // its ledger entry is re-measured after the load decays below the
-    // honest StampLoad bar; both figures ship in the artifact.
-    val refs = ledger(k => names.contains(k) || hNames.contains(k))
-    def outliersOf(rs: Seq[(String, Option[Double])]) = rs.collect {
-      case (name, Some(v)) if refs.get(name).exists(r =>
-        v > (if (r >= HeavyLedgerSec) HeavyOutlierFactor else OutlierFactor) * r) =>
-        name -> v
-    }
-    val firstPass = outliersOf(results) ++ outliersOf(hResults)
-    var remeasured = false
-    if (firstPass.nonEmpty) {
-      System.err.println(s"BENCH OUTLIERS vs ledger: ${firstPass.map {
-        case (n, v) => f"$n=$v%.3f (ref ${refs(n)}%.3f)" }.mkString(", ")}")
-      var waited3 = 0
-      while (loadavg1m > StampLoad && waited3 < 300) {
-        System.err.println(f"BENCH OUTLIER WAIT loadavg ${loadavg1m}%.2f > $StampLoad%.1f, sleeping 15s")
-        Thread.sleep(15000); waited3 += 15
-      }
-      if (loadavg1m <= StampLoad) {
-        remeasured = true
-        val names2 = firstPass.map(_._1)
-        val re = time(names2.filter(n => names.contains(n)), runs = 2) ++
-          time(names2.filter(n => hNames.contains(n)), runs = 2)
-        val reMap = re.toMap
-        def merge(rs: Seq[(String, Option[Double])]) = rs.map {
-          case (k, v) if reMap.contains(k) =>
-            k -> (v ++ reMap(k)).minOption
-          case kv => kv
-        }
-        results = merge(results)
-        hResults = merge(hResults)
-        loadEnd = loadavg1m
-      } else {
-        // kept in the artifact with outliers_remeasured:false
-        System.err.println("BENCH OUTLIERS stand un-re-measured (load never decayed)")
-      }
-    }
-    val remStr = firstPass.map { case (k, v) =>
-      "\"" + k + f"""\":$v%.3f""" }.mkString("{", ",", "}")
-
-    val errs = results.count(_._2.isEmpty)
-    val hErrs = hResults.count(_._2.isEmpty)
-    val total = results.flatMap(_._2).sum
-    val hTotal = hResults.flatMap(_._2).sum
-    // The `contended` stamp (r16, judge ask #4): the raw END loadavg is
-    // dominated by the bench's OWN 32-thread run — an idle-box run used
-    // to self-stamp contended purely from its own end-load. Stamp from
-    // loadStart plus a DECAYED post-run resample: wait (≤90 s, 15 s
-    // steps) for the 1-min load to shed the bench's own contribution,
-    // then read it. Raw end-load keeps its role as the retry/outlier
-    // trigger above; only the decayed figure feeds the stamp.
-    var loadDecayed = loadEnd
-    var waitedStamp = 0
-    while (loadDecayed > StampLoad && waitedStamp < 90) {
-      Thread.sleep(15000); waitedStamp += 15
-      loadDecayed = loadavg1m
-    }
-    val contended = loadStart > StampLoad || loadDecayed > StampLoad
-    val line = f"""{"metric":"total","value":$total%.3f,"unit":"sec","runs":3,"agg":"min","errors":$errs,"queries":${fmt(results)},"h_total":$hTotal%.3f,"h_runs":2,"h_errors":$hErrs,"h_queries":${fmt(hResults)},"loadavg_start":$loadStart%.2f,"loadavg_end":$loadEnd%.2f,"loadavg_end_decayed":$loadDecayed%.2f,"loadavg_waited_sec":$waited,"retried":$retried,"outliers_first_pass":$remStr,"outliers_remeasured":$remeasured,"stamp_load":$StampLoad%.1f,"contended":$contended,"sf":"$sfDir"}"""
-    println(line)
-    // r17 (judge ask #1): the driver has never parsed the stdout line —
-    // sbt's logger prefixes it "[info] " and appends "[success] ..."
-    // lines, so every BENCH_r*.json back to r11 carries parsed:null and
-    // every PERF comparison is empty. Write the exact same line verbatim
-    // to a plain file at the repo root as well; the stdout print stays
-    // for log-tail readers. SPARK_GRAFT_BENCH_OUT overrides the path.
+    val hResults = time(hNames, runs = 2)
+    val line = resultLine(results, hResults, loadStart, loadavg1m, cpus, sfDir)
     try {
       val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_result.json")
       java.nio.file.Files.write(java.nio.file.Paths.get(out),
@@ -297,5 +130,8 @@ object Bench {
       System.err.println(s"BENCH RESULT file write failed: ${t.getMessage}")
     }
     spark.stop()
+    // last, after Spark's shutdown: a caller reading stdout takes the
+    // final line the program prints
+    println(line)
   }
 }

@@ -335,19 +335,4 @@ object Csv {
    * charset closed form. */
   def syntheticCsvPayloads(df: DataFrame, idCol: String): DataFrame =
     Fixtures.syntheticPayloads(df, idCol)(syntheticCsvBytes)
-
-  /** Executor-side delimited-text fixtures — the t47 oracle replays
-   * the dialect formulas. */
-  def syntheticCsvs(df: DataFrame, idCol: String): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("csv_text", StringType)))
-    val idIdx = df.schema.fieldIndex(idCol)
-    df.mapPartitions { it =>
-      it.map { r =>
-        val id = r.getLong(idIdx)
-        Row(id, syntheticCsv(id))
-      }
-    }(Encoders.row(schema))
-  }
 }
